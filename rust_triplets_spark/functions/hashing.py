@@ -7,8 +7,7 @@ anchor/positive swaps, negative picks) from seeded hashes / a seeded RNG
 unstable across releases, so bit-parity is a non-goal; instead this engine
 defines ONE explicit 31-bit arithmetic hash built only from ``+ * % ^ >>`` so
 the *identical* function evaluates in Spark SQL, DuckDB SQL (the correctness
-oracle), and Python — verified by ``scripts/xengine_hash_probe.py`` and
-``tests/test_hashing.py``.
+oracle), and Python — verified by ``tests/test_hashing.py``.
 
 Why 31-bit: every intermediate stays below 2^63, so the arithmetic is exact
 in BIGINT on both engines (and safe under Spark ANSI mode — no overflow).
@@ -208,23 +207,3 @@ def hash31_str_sql(s_sql: str, seed: int = 42) -> str:
 
 def hash31_str_py(s: str, seed: int = 42) -> int:
     return hash31_py(strfold_py(s), seed)
-
-
-# ---------------------------------------------------------------------------
-# derived helpers
-# ---------------------------------------------------------------------------
-
-def uniform01_col(x, seed: int = 42) -> Column:
-    """Map a BIGINT column to a double in [0, 1) — same IEEE division both
-    engines (mirrors ``hasher.finish() / u64::MAX``, src/splits.rs:627)."""
-    return hash31_col(x, seed).cast("double") / F.lit(float(M31))
-
-
-def uniform01_sql(x_sql: str, seed: int = 42) -> str:
-    return f"(CAST({hash31_sql(x_sql, seed)} AS DOUBLE) / {float(M31)!r})"
-
-
-def derive_epoch_seed(seed: int, epoch: int) -> int:
-    """``base_seed ^ epoch`` — single place for epoch-seed derivation
-    (src/hash.rs:38-40)."""
-    return seed ^ epoch

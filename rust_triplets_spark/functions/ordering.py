@@ -14,13 +14,14 @@ broadcast join back. Total order realized: (key, *tiebreak) — exactly what
 the single window would produce, so DuckDB oracle twins can keep the plain
 ``row_number`` form.
 
-Exchange-reuse note: the bucket-counts frame is aggregated FROM THE RANKED
-frame, not from the input. The rank window shuffles on hash(parts, __bkt)
-and its output keeps that partitioning, so the counts aggregate needs no
-new exchange — and because the counts subtree and the join's probe side
-share the identical Exchange node, Spark's ReuseExchange rule executes the
-upstream lineage ONCE. Aggregating from the raw input instead would run
-the whole upstream pipeline twice (measured 2× on every caller at sf0.1).
+Input-read note: the plan reads its input TWICE. The bucket-counts frame
+is written as an aggregate over the ranked frame, but ColumnPruning drops
+the rank Window from the counts branch (the count needs none of its
+columns), so that branch scans and shuffles the input on its own, and the
+two branches prune different columns, so ReuseExchange never matches
+them. A caller whose input is expensive (a multi-shuffle upstream plan)
+must pass a materialized frame — e.g. ``functions.caching.cache_scoped``,
+as ``operators.epoch.epoch_order`` does.
 
 Skew note: hash-valued keys (hash31 outputs are uniform on [0, M31)) fill
 buckets evenly by construction; arbitrary keys may skew buckets, which
@@ -50,9 +51,13 @@ def _rank_and_offset(
     prefix_col: str | None = None,
 ) -> DataFrame:
     """Shared tail of the bucketed-ranking plans: rank within
-    (parts, __bkt), derive per-bucket counts from the RANKED frame (no new
-    shuffle — see module doc), prefix-sum them into start offsets, and
-    broadcast-join the offsets back.
+    (parts, __bkt), derive per-bucket counts, prefix-sum them into start
+    offsets, and broadcast-join the offsets back.
+
+    The counts are written over the ranked frame, but ColumnPruning drops
+    the Window from that branch, so ``with_b`` is scanned and shuffled
+    twice — once for the rank, once for the counts (see module doc).
+    Callers with an expensive input must pass a materialized one.
 
     ``count_col``: also attach the TOTAL partition row count (the
     ``count(*) OVER (PARTITION BY part)`` twin) — derived from the same
@@ -236,17 +241,3 @@ def bucketed_rank_prefix_sum(
         with_b, key_col, tiebreak, parts, pos_col, None,
         value_col=value_col, prefix_col=prefix_col,
     )
-
-
-def group_count(
-    df: DataFrame, part_cols: Sequence[str], out_col: str = "__cnt"
-) -> DataFrame:
-    """Attach per-group row counts via aggregate + broadcast join — the
-    scalable stand-in for ``count(*) OVER (PARTITION BY low_card_col)``
-    (a global count when ``part_cols`` is empty)."""
-    parts = list(part_cols)
-    if not parts:
-        counts = df.groupBy().agg(F.count("*").alias(out_col))
-        return df.crossJoin(F.broadcast(counts))
-    counts = df.groupBy(*parts).agg(F.count("*").alias(out_col))
-    return df.join(F.broadcast(counts), parts, "inner")

@@ -1006,13 +1006,6 @@ def pq_index(
     )
 
 
-def pq_reconstruct(
-    base: DataFrame, m: int, sub: int, n_codes: int, seed: int,
-) -> DataFrame:
-    """(id, __rv, __rn) projection of :func:`pq_index`."""
-    return pq_index(base, m, sub, n_codes, seed).select("id", "__rv", "__rn")
-
-
 def ivfpq_seeded_topk(
     df: DataFrame, id_col: str, vec_col: str, k: int = 5,
     m: int = 8, n_codes: int = 16, dim: int | None = None,

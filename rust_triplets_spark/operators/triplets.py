@@ -1226,19 +1226,6 @@ WHERE nc.negative_text <> a.anchor_text AND nc.negative_text <> p.positive_text
 AUTO_RECIPE_NAME = "auto_injected_long_section_chunk_pair_wrong_article"  # src/constants.rs:104-109
 
 
-def auto_chunk_pair_recipe() -> TripletRecipe:
-    """The auto-injected recipe itself (source_chunk_pair_recipe,
-    src/sampler/mod.rs:690-702): Context/Context/Context + WrongArticle."""
-    return TripletRecipe(
-        name=AUTO_RECIPE_NAME,
-        negative_strategy="wrong_article",
-        weight=1.0,
-        anchor=Role("context"),
-        positive_selector=Role("context"),
-        negative_selector=Role("context"),
-    )
-
-
 def resolve_source_recipe_plans(
     records: DataFrame,
     source_col: str,

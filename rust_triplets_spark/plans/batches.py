@@ -91,6 +91,13 @@ def batch_iterator(
     resuming from ``checkpoint.step``; persists progress after each yielded
     batch when ``checkpoint_path`` is set.
 
+    The epoch order reads ``df`` once (see :mod:`operators.epoch`); the
+    batches are range-partitioned on ``batch_idx`` with the partition
+    count left to AQE, which coalesces neighbouring ranges — partitions
+    stay contiguous batch ranges, so ``toLocalIterator`` still yields
+    batches in order, with no fixed task ceiling at scale and no near-empty
+    partition jobs at small scale.
+
     Auto-save semantics are AT-LEAST-ONCE: batch k's consumption is
     persisted when the consumer requests batch k+1 (generator resume), so
     a crash after consuming-but-not-requesting replays exactly the last
@@ -106,7 +113,7 @@ def batch_iterator(
     batched = epoch_batches(
         df, id_col, source_col, checkpoint.epoch, checkpoint.seed,
         batch_size, checkpoint.step, label, id_is_string,
-    ).repartitionByRange(16, "batch_idx").sortWithinPartitions("batch_idx", "position")
+    ).repartitionByRange("batch_idx").sortWithinPartitions("batch_idx", "position")
 
     current_idx, rows = None, []
     import pandas as pd

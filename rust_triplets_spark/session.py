@@ -47,17 +47,3 @@ def get_spark(app_name: str = "rust_triplets_spark", cpus: int | None = None) ->
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None) -> dict:
-    """Load the driver's parquet tables from ``sf_dir`` and register temp views."""
-    names = tables or (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

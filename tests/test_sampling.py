@@ -124,6 +124,52 @@ def test_epoch_order_changes_per_epoch_and_oversamples(spark, corpus):
     assert len({r["source"] for r in first_cycle}) == n_src
 
 
+def test_epoch_order_reads_shuffled_input_once(spark, corpus):
+    """epoch_order's four consumers of its keyed input (rank and bucket
+    counts of the per-source ranking, per-source stats, interleave join)
+    share ONE read of it: the optimized plan reads a shuffled input once,
+    a cached relation counting once however many branches scan it. A plain
+    scan is re-read, not cached. The streamed batches still equal the
+    epoch_batches order, also on resume."""
+    from rust_triplets_spark.plans.batches import Checkpoint, batch_iterator, epoch_batches
+
+    identity = spark.sparkContext._jvm.System.identityHashCode
+
+    def reads(df):
+        out = epoch_order(df, "id", "source", epoch=1, seed=42, id_is_string=False)
+        leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+        found = set()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "InMemoryRelation":
+                found.add(("cache", identity(leaf.cacheBuilder())))
+            else:
+                found.add(("scan", i))
+        return found
+
+    shuffled = corpus.repartition(3, "source")
+    assert len(reads(shuffled)) == 1, reads(shuffled)
+    assert all(kind == "scan" for kind, _ in reads(corpus))
+
+    want = [
+        (r["batch_idx"], r["id"])
+        for r in epoch_batches(
+            shuffled, "id", "source", 1, 42, 16, id_is_string=False
+        ).orderBy("position").collect()
+    ]
+
+    def streamed(step):
+        it = batch_iterator(
+            shuffled, "id", "source", Checkpoint(42, 1, step), batch_size=16,
+            id_is_string=False,
+        )
+        return [(idx, i) for idx, pdf in it for i in pdf["id"]]
+
+    assert len({b for b, _ in want}) > 2
+    assert streamed(0) == want
+    assert streamed(1) == [w for w in want if w[0] >= 1]
+
+
 def test_weighted_interleave_ratios(spark):
     rows = [(i, "a" if i < 300 else "b") for i in range(600)]
     df = spark.createDataFrame(rows, "id long, source string")
